@@ -101,7 +101,7 @@ def _emit_uncontested(fast: pd.DataFrame, seen_at: str) -> list[pd.DataFrame]:
     # the gate; null confidence reads as 0.0
     promo = (
         ~ct.isin(NON_CANONICAL_TYPES)
-        & gw.fillna(False).astype(bool)
+        & gw.eq(True)
         & (rs == "resolved")
         & (conf.fillna(0.0) >= MIN_CANONICAL_CONFIDENCE)
     )
@@ -255,7 +255,7 @@ def canonicalize_claims(
             group_id = np.cumsum(neq_prev) - 1
             promo = (
                 (~batch["claim_type"].isin(NON_CANONICAL_TYPES))
-                & batch["graph_worthy"].fillna(False).astype(bool)
+                & batch["graph_worthy"].eq(True)
                 & (batch["resolution_status"] == "resolved")
                 & (batch["canonical_confidence"].fillna(0.0) >= MIN_CANONICAL_CONFIDENCE)
             ).to_numpy()

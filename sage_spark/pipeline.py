@@ -18,9 +18,12 @@ row changes.
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .operators.canonicalize import (
     canonicalize_claims,
@@ -32,7 +35,7 @@ from .operators.canonicalize import (
 )
 from .operators.chunking import build_chunks
 from .operators.extraction import extract_claims_stage, extract_documents
-from .schema import FACTS_SCHEMA, RUNS_SCHEMA
+from .schema import FACTS_SCHEMA
 from .store import TableStore
 
 
@@ -135,94 +138,160 @@ def run_pipeline(
     )
 
     # --- stage 5: materialize ---------------------------------------------------
-    store.upsert(documents.drop("message_id"), "documents", ["doc_id"])
-    store.upsert(chunks, "chunks", ["chunk_id"])
-    store.upsert(updated_claims, "claims", ["claim_id"])
-    store.upsert(claim_fact_edges, "claim_fact_edges", ["claim_id", "fact_id", "relation_type"])
+    # Each upsert is a few small Spark jobs; run one after another they leave
+    # most executor slots idle. They run instead as a dependency graph on
+    # driver threads that inherit this thread's job group and description:
+    #
+    #   documents, chunks, claims ──────────────────┐
+    #   claim_fact_edges ──> facts, edges ───────────┼──> store totals
+    #   lineage scalars ──> runs ────────────────────┘
+    #
+    # Each upsert reads only staging parquet and its own table, except facts
+    # and edges: incremental_support reads the committed claim_fact_edges
+    # table. run_pipeline waits for every thread and only then raises the
+    # first error (in task-list order); the staging dir is dropped only
+    # after a fully successful run.
 
-    # idempotent support_count, pruned to this batch: the replay already
-    # emitted every fact of every canonical_key the batch touched, so only
-    # those facts can change support. Re-derive from the edge history of just
-    # those fact_ids (broadcast semi-join; at 10^12 docs this is a bucketed
-    # probe, never an O(store) recompute) and upsert once — untouched facts
-    # keep their stored support_count.
-    facts_with_support = incremental_support(
-        facts, store.read(spark, "claim_fact_edges")
-    )
-    store.upsert(facts_with_support, "facts", ["fact_id"])
+    def facts_with_support() -> DataFrame:
+        # idempotent support_count, pruned to this batch: the replay already
+        # emitted every fact of every canonical_key the batch touched, so
+        # only those facts can change support. Re-derive from the edge
+        # history of just those fact_ids (broadcast semi-join; at 10^12 docs
+        # this is a bucketed probe, never an O(store) recompute) — untouched
+        # facts keep their stored support_count.
+        return incremental_support(facts, store.read(spark, "claim_fact_edges"))
 
-    # Typed graph edges are additive projections of rows (SCD-2 never
-    # removes an edge; a supersede only adds one), so deriving them from the
-    # BATCH rows and upserting on (src, dst, type) reaches the same store
-    # state as a full rebuild — without the O(store) rescan per run. The
-    # batch facts cover every touched key (incl. replayed prior versions),
-    # so status-change edges are always present.
-    graph_edges = graph_edges_from_outputs(updated_claims, facts_with_support, documents)
-    store.upsert(graph_edges, "edges", ["src", "dst", "type"])
+    def upsert_edges() -> None:
+        # Typed graph edges are additive projections of rows (SCD-2 never
+        # removes an edge; a supersede only adds one), so deriving them from
+        # the BATCH rows and upserting on (src, dst, type) reaches the same
+        # store state as a full rebuild — without the O(store) rescan per
+        # run. The batch facts cover every touched key (incl. replayed prior
+        # versions), so status-change edges are always present.
+        graph_edges = graph_edges_from_outputs(updated_claims, facts_with_support(), documents)
+        store.upsert(graph_edges, "edges", ["src", "dst", "type"])
 
-    # --- lineage (S15 analog): per-partition metrics, no driver-side loops -----
-    claim_part_metrics = (
-        claims.groupBy("partition_id")
-        .agg(F.countDistinct("doc_id").alias("docs_processed"), F.count("*").alias("claims_extracted"))
-    )
-    outcome_metrics = claim_updates.agg(
-        F.sum(
-            F.when(
-                F.col("mutation_action").isin(
-                    "insert_new_fact", "confirm_existing_fact", "supersede_current_fact"
-                ),
-                1,
-            ).otherwise(0)
-        ).alias("claims_canonicalized"),
-    )
-    conflict_count = claim_fact_edges.filter(F.col("relation_type") == "CONTRADICTS").count()
-    canonicalized = outcome_metrics.collect()[0]["claims_canonicalized"] or 0
-    runs = claim_part_metrics.select(
-        F.lit(run_id).alias("run_id"),
-        F.col("partition_id").cast("int"),
-        F.lit("extract+canonicalize").alias("stage"),
-        F.lit("completed").alias("status"),
-        F.lit(run_ts).alias("processed_at"),
-        F.col("docs_processed").cast("long"),
-        F.col("claims_extracted").cast("long"),
-        F.lit(int(canonicalized)).cast("long").alias("claims_canonicalized"),
-        F.lit(int(conflict_count)).cast("long").alias("conflicts_found"),
-        F.lit(None).cast("string").alias("errors_json"),
-    )
-    # run-level summary row (partition_id = -1): present even for a no-op
-    # resume, so every run_id is visible in lineage
-    ingested_docs = documents.count()
-    claims_total = claims.count()
-    summary = spark.createDataFrame(
-        [
-            (
-                run_id,
-                -1,
-                "run_summary",
-                "completed",
-                run_ts,
-                int(ingested_docs),
-                int(claims_total),
-                int(canonicalized),
-                int(conflict_count),
-                None,
+    def write_lineage() -> int:
+        """Lineage (S15 analog): per-partition metrics plus a run-level
+        summary row; returns the conflict count."""
+        scalars = _lineage_scalars(documents, claims, claim_updates, claim_fact_edges)
+        canonicalized, conflicts = scalars["claims_canonicalized"], scalars["conflicts"]
+        runs = (
+            claims.groupBy("partition_id")
+            .agg(F.countDistinct("doc_id").alias("docs_processed"), F.count("*").alias("claims_extracted"))
+            .select(
+                F.lit(run_id).alias("run_id"),
+                F.col("partition_id").cast("int"),
+                F.lit("extract+canonicalize").alias("stage"),
+                F.lit("completed").alias("status"),
+                F.lit(run_ts).alias("processed_at"),
+                F.col("docs_processed").cast("long"),
+                F.col("claims_extracted").cast("long"),
+                F.lit(canonicalized).cast("long").alias("claims_canonicalized"),
+                F.lit(conflicts).cast("long").alias("conflicts_found"),
+                F.lit(None).cast("string").alias("errors_json"),
             )
-        ],
-        RUNS_SCHEMA,
-    )
-    store.upsert(runs.unionByName(summary), "runs", ["run_id", "partition_id", "stage"])
+        )
+        # run-level summary row (partition_id = -1): present even for a
+        # no-op resume, so every run_id is visible in lineage. Built from
+        # literals: no Python-side RDD (and its executor job) for one row.
+        summary = spark.range(1).select(
+            F.lit(run_id).alias("run_id"),
+            F.lit(-1).alias("partition_id"),
+            F.lit("run_summary").alias("stage"),
+            F.lit("completed").alias("status"),
+            F.lit(run_ts).alias("processed_at"),
+            F.lit(scalars["ingested_docs"]).cast("long").alias("docs_processed"),
+            F.lit(scalars["claims_total"]).cast("long").alias("claims_extracted"),
+            F.lit(canonicalized).cast("long").alias("claims_canonicalized"),
+            F.lit(conflicts).cast("long").alias("conflicts_found"),
+            F.lit(None).cast("string").alias("errors_json"),
+        )
+        store.upsert(runs.unionByName(summary), "runs", ["run_id", "partition_id", "stage"])
+        return conflicts
 
-    facts_df = store.read(spark, "facts")
+    # one thread per task: a dependent task holds its thread while it waits
+    with ThreadPoolExecutor(max_workers=7, thread_name_prefix="upsert") as pool:
+
+        def start(fn, *deps: Future) -> Future:
+            def run():
+                for dep in deps:
+                    dep.result()
+                return fn()
+
+            return pool.submit(inheritable_thread_target(spark)(run))
+
+        claim_edges_committed = start(
+            lambda: store.upsert(
+                claim_fact_edges, "claim_fact_edges", ["claim_id", "fact_id", "relation_type"]
+            )
+        )
+        lineage = start(write_lineage)
+        tasks = [
+            start(lambda: store.upsert(documents.drop("message_id"), "documents", ["doc_id"])),
+            start(lambda: store.upsert(chunks, "chunks", ["chunk_id"])),
+            start(lambda: store.upsert(updated_claims, "claims", ["claim_id"])),
+            claim_edges_committed,
+            start(lambda: store.upsert(facts_with_support(), "facts", ["fact_id"]), claim_edges_committed),
+            start(upsert_edges, claim_edges_committed),
+            lineage,
+        ]
+    # leaving the pool waited for every thread
+    for task in tasks:
+        if task.exception() is not None:
+            raise task.exception()
+
+    totals = _store_totals(spark, store)
     result = PipelineResult(
-        documents=store.read(spark, "documents").count(),
-        chunks=store.read(spark, "chunks").count(),
-        claims=store.read(spark, "claims").count(),
-        facts_current=facts_df.filter(F.col("status") == "current").count(),
-        facts_superseded=facts_df.filter(F.col("status") == "superseded").count(),
-        conflicts=int(conflict_count),
-        edges=store.read(spark, "edges").count(),
+        documents=totals["documents"],
+        chunks=totals["chunks"],
+        claims=totals["claims"],
+        facts_current=totals["facts_current"],
+        facts_superseded=totals["facts_superseded"],
+        conflicts=lineage.result(),
+        edges=totals["edges"],
     )
     if claims_hook is not None:
         claims_hook(claims)
     store.drop(f"_staging/{run_id}")
     return result
+
+
+def _lineage_scalars(
+    documents: DataFrame, claims: DataFrame, claim_updates: DataFrame, claim_fact_edges: DataFrame
+) -> dict[str, int]:
+    """This batch's lineage scalars, in one aggregate query."""
+    canonicalized = F.col("mutation_action").isin(
+        "insert_new_fact", "confirm_existing_fact", "supersede_current_fact"
+    )
+    return _count_tags(
+        [
+            (documents, F.lit("ingested_docs")),
+            (claims, F.lit("claims_total")),
+            (claim_updates, F.when(canonicalized, "claims_canonicalized")),
+            (claim_fact_edges, F.when(F.col("relation_type") == "CONTRADICTS", "conflicts")),
+        ],
+        ["ingested_docs", "claims_total", "claims_canonicalized", "conflicts"],
+    )
+
+
+def _store_totals(spark: SparkSession, store: TableStore) -> dict[str, int]:
+    """Whole-store row counts, facts split by status, in one aggregate query."""
+    return _count_tags(
+        [
+            (store.read(spark, "documents"), F.lit("documents")),
+            (store.read(spark, "chunks"), F.lit("chunks")),
+            (store.read(spark, "claims"), F.lit("claims")),
+            (store.read(spark, "facts"), F.concat(F.lit("facts_"), F.col("status"))),
+            (store.read(spark, "edges"), F.lit("edges")),
+        ],
+        ["documents", "chunks", "claims", "facts_current", "facts_superseded", "edges"],
+    )
+
+
+def _count_tags(parts: list[tuple[DataFrame, Column]], tags: list[str]) -> dict[str, int]:
+    """Count the rows each part's tag column marks with each tag: the parts
+    are unioned, so every input is scanned once in a single scan stage."""
+    tagged = reduce(DataFrame.unionAll, [df.select(tag.alias("tag")) for df, tag in parts])
+    row = tagged.agg(*[F.count_if(F.col("tag") == tag).alias(tag) for tag in tags]).first()
+    return {tag: row[tag] for tag in tags}

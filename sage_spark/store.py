@@ -12,16 +12,20 @@ Two layouts:
 * legacy (``buckets=None``): ``upsert`` rewrites the whole table as
   (existing ANTI-JOIN updates) UNION updates — simple, O(store) per batch.
 * hash-bucketed (``buckets=N``): rows live in ``__bucket=K/`` partition dirs
-  keyed by xxhash64 of the upsert key. An upsert reads ONLY the buckets its
-  updates hash into (partition pruning on the scan) and rewrites ONLY those
-  bucket dirs (dynamic partition overwrite) — per-batch cost scales with the
-  batch's touched buckets, not the store, which is the parquet analog of an
-  Iceberg MERGE at 10^12-row store scale. Iceberg additionally gives atomic
-  snapshot commits; dynamic overwrite swaps each touched bucket dir
-  non-atomically, an accepted stand-in here.
+  keyed by xxhash64 of the upsert key. An upsert first writes its
+  deduplicated updates, bucket-partitioned, to a store-owned sibling dir
+  (``name.__updates__``), then reads ONLY the buckets found there (partition
+  pruning on the scan) and rewrites ONLY those bucket dirs (dynamic
+  partition overwrite) — per-batch cost scales with the batch's touched
+  buckets, not the store, which is the parquet analog of an Iceberg MERGE
+  at 10^12-row store scale. Iceberg additionally gives atomic snapshot
+  commits; dynamic overwrite swaps each touched bucket dir non-atomically,
+  an accepted stand-in here.
 
-Full-table writes go to a temp dir then swap, so a killed job never leaves a
-half-written table.
+Each bucketed table records its layout (bucket count, hash keys) and its
+schema in ``_LAYOUT.json``, so reads skip Spark's parquet schema-inference
+job. Full-table writes go to a temp dir then swap, so a killed job never
+leaves a half-written table.
 """
 
 from __future__ import annotations
@@ -35,6 +39,7 @@ from pyspark.sql.types import StructType
 
 BUCKET_COL = "__bucket"
 LAYOUT_FILE = "_LAYOUT.json"
+UPDATES_SUFFIX = ".__updates__"
 
 
 class TableStore:
@@ -52,7 +57,8 @@ class TableStore:
 
     def list_tables(self) -> list[str]:
         """Published table names: every table dir in the store root, with
-        swap/compaction staging dirs (``name.__tmp__`` etc.) and hidden
+        swap/compaction/upsert staging dirs (``name.__tmp__``,
+        ``name.__updates__`` etc.) and hidden
         working dirs (``_staging`` and friends — the parquet hidden-path
         convention) excluded."""
         return sorted(
@@ -69,7 +75,12 @@ class TableStore:
 
         * ``.__old__`` — the pre-swap table, always complete by construction;
         * a COMPLETE staged dir (``.__tmp__``/``.__compact__`` carrying
-          Spark's ``_SUCCESS`` marker) — the post-swap content.
+          Spark's ``_SUCCESS`` marker) — the post-swap content;
+        * a bucketed upsert's ``.__updates__`` dir that carries both
+          ``_SUCCESS`` and its layout record: the create path writes that
+          record only just before renaming the dir into place, so such a
+          dir IS the new table. Staged updates for an existing table never
+          get a layout record and are never adopted.
 
         Without this, a killed compaction made ``read`` silently return an
         empty table and a later upsert recreated it fresh — permanent data
@@ -86,6 +97,9 @@ class TableStore:
             if staged.exists() and (staged / "_SUCCESS").exists():
                 staged.rename(target)
                 return
+        staged = target.with_name(target.name + UPDATES_SUFFIX)
+        if (staged / "_SUCCESS").exists() and (staged / LAYOUT_FILE).exists():
+            staged.rename(target)
 
     def _swap_in(self, tmp: Path, target: Path) -> None:
         """Publish ``tmp`` as ``target`` without a window where the table
@@ -103,10 +117,15 @@ class TableStore:
             shutil.rmtree(aside)
 
     # -- layout metadata ---------------------------------------------------
-    def _write_layout(self, target: Path, layout_keys: list[str]) -> None:
-        (target / LAYOUT_FILE).write_text(
-            json.dumps({"version": 1, "buckets": self.buckets, "layout_keys": layout_keys})
-        )
+    def _write_layout(
+        self, target: Path, layout_keys: list[str], schema: StructType | None = None
+    ) -> None:
+        record = {"version": 1, "buckets": self.buckets, "layout_keys": layout_keys}
+        if schema is not None:
+            # the full row type incl. the int __bucket partition column, as
+            # Spark's own inference would report it
+            record["schema"] = schema.jsonValue()
+        (target / LAYOUT_FILE).write_text(json.dumps(record))
 
     def _read_layout(self, table: str) -> dict | None:
         p = self.path(table) / LAYOUT_FILE
@@ -139,12 +158,23 @@ class TableStore:
         records the layout the caller asserts the dirs were hashed by."""
         self._write_layout(self.path(table), layout_keys)
 
+    def _scan(self, spark: SparkSession, table: str) -> DataFrame:
+        """The table's parquet files, ``__bucket`` column included. A table
+        whose layout record carries a schema is read with it, which skips
+        the schema-inference job Spark otherwise runs per read; tables
+        recorded without one (``adopt_layout``, older stores) still infer."""
+        rec = self._read_layout(table)
+        reader = spark.read
+        if rec is not None and "schema" in rec:
+            reader = reader.schema(StructType.fromJson(rec["schema"]))
+        return reader.parquet(str(self.path(table)))
+
     def read(self, spark: SparkSession, table: str, schema: StructType | None = None) -> DataFrame:
         if not self.exists(table):
             if schema is None:
                 raise FileNotFoundError(f"table {table} does not exist and no schema given")
             return spark.createDataFrame([], schema)
-        df = spark.read.parquet(str(self.path(table)))
+        df = self._scan(spark, table)
         # bucketed tables surface the partition dir as a column; the layout
         # is an implementation detail, not part of the table contract
         return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
@@ -175,10 +205,26 @@ class TableStore:
     ) -> None:
         """Iceberg-MERGE-equivalent: updates win over existing rows on key.
 
-        Legacy layout rewrites the whole table. Bucketed layout reads and
-        rewrites only the bucket dirs the updates hash into: the scan prunes
-        untouched ``__bucket=K/`` partitions and the write uses dynamic
-        partition overwrite, so per-batch IO is O(touched buckets).
+        Legacy layout rewrites the whole table. Bucketed layout writes the
+        deduplicated updates once, bucket-partitioned, to the store-owned
+        sibling dir ``name.__updates__``. That write pins the updates: a
+        nondeterministic upstream is evaluated exactly once, so the touched
+        bucket set (the ``__bucket=K`` dirs listed there, no Spark job) and
+        the rows that overwrite those buckets can never disagree — otherwise
+        dynamic overwrite could drop a bucket's pre-existing rows. Then:
+
+        * table absent: record the layout and schema in the staged dir and
+          rename it into place (``_recover`` adopts it if a crash lands
+          between the two);
+        * table present: anti-join the touched buckets of the table (read
+          with its recorded schema) against the staged keys, union the
+          staged rows, and rewrite only those bucket dirs with dynamic
+          partition overwrite.
+
+        With the input read from parquet that is at most four Spark jobs:
+        the dedupe shuffle and the staged write, then the broadcast of the
+        staged keys and the merge write. The staged dir is removed whether
+        the upsert succeeds or fails.
 
         ``layout_keys`` decouples the partition-dir hash from the upsert
         identity: lay the table out by the columns the READ side probes on
@@ -199,47 +245,56 @@ class TableStore:
             self.overwrite(merged, table)
             return
 
-        updates = df.dropDuplicates(keys).withColumn(
-            BUCKET_COL, self._bucket_expr(layout_keys or keys)
-        )
-        # pin the lineage before it is consumed by two separate actions (the
-        # touched-bucket collect and the overwrite): a nondeterministic
-        # upstream must not emit rows into a bucket absent from `touched`,
-        # or dynamic overwrite would drop that bucket's pre-existing rows
-        updates = updates.localCheckpoint(eager=True)
+        layout_keys = layout_keys or keys
         self._recover(table)
         target = self.path(table)
-        if not target.exists():
-            if updates.isEmpty():
-                # creating a table from zero rows would write a partitioned
-                # dir with no parquet files (unreadable) — an empty batch
-                # against an absent table is a no-op instead
+        rec = None
+        if target.exists():
+            self._check_layout(table, layout_keys)
+            rec = self._read_layout(table)
+        updates = df.dropDuplicates(keys).withColumn(BUCKET_COL, self._bucket_expr(layout_keys))
+        staged = target.with_name(target.name + UPDATES_SUFFIX)
+        if staged.exists():
+            shutil.rmtree(staged)
+        try:
+            updates.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(staged))
+            touched = sorted(
+                int(p.name.split("=", 1)[1])
+                for p in staged.iterdir()
+                if p.name.startswith(BUCKET_COL + "=")
+            )
+            if not touched:
+                # an empty batch is a no-op; creating a table from it would
+                # leave a partitioned dir with no parquet files (unreadable)
                 return
-            tmp = target.with_name(target.name + ".__tmp__")
-            if tmp.exists():
-                shutil.rmtree(tmp)
-            updates.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(tmp))
-            # layout rides inside tmp BEFORE the publish rename: a crash
-            # after the rename (or a _recover that adopts this staged dir)
-            # must never yield a bucketed table without its layout record
-            self._write_layout(tmp, layout_keys or keys)
-            tmp.rename(target)
-            return
-        self._check_layout(table, layout_keys or keys)
-        # the touched-bucket list is a bounded scalar set (<= self.buckets),
-        # never data-sized
-        touched = sorted(r[0] for r in updates.select(BUCKET_COL).distinct().collect())
-        existing = (
-            spark.read.parquet(str(target)).filter(F.col(BUCKET_COL).isin(touched))
-        )
-        kept = existing.join(updates.select(*keys).dropDuplicates(keys), on=keys, how="left_anti")
-        merged = kept.unionByName(updates, allowMissingColumns=True)
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .parquet(str(target))
-        )
+            if rec is None:
+                # the layout record rides inside the staged dir BEFORE the
+                # publish rename: a crash after the rename (or a _recover
+                # that adopts the staged dir) never yields a bucketed table
+                # without its layout record
+                self._write_layout(staged, layout_keys, updates.schema)
+                staged.rename(target)
+                return
+            staged_rows = spark.read.schema(updates.schema).parquet(str(staged))
+            existing = self._scan(spark, table).filter(F.col(BUCKET_COL).isin(touched))
+            # staged rows are already one per key: no dedupe on this side
+            kept = existing.join(staged_rows.select(*keys), on=keys, how="left_anti")
+            merged = kept.unionByName(staged_rows, allowMissingColumns=True)
+            recorded = StructType.fromJson(rec["schema"]) if "schema" in rec else None
+            if recorded is not None and merged.schema.simpleString() != recorded.simpleString():
+                # schema evolution (e.g. a new column): record the wider
+                # schema BEFORE writing rows that carry it, so a crash
+                # between the two can only add typed-null reads
+                self._write_layout(target, layout_keys, merged.schema)
+            (
+                merged.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(BUCKET_COL)
+                .parquet(str(target))
+            )
+        finally:
+            if staged.exists():
+                shutil.rmtree(staged)
 
     def read_pruned(
         self,
@@ -274,7 +329,7 @@ class TableStore:
             .distinct()
             .collect()
         )
-        df = spark.read.parquet(str(self.path(table))).filter(F.col(BUCKET_COL).isin(touched))
+        df = self._scan(spark, table).filter(F.col(BUCKET_COL).isin(touched))
         df = df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
         return _reconcile(df, schema)
 
@@ -298,7 +353,7 @@ class TableStore:
         target = self.path(table)
         if not target.exists():
             return
-        df = spark.read.parquet(str(target))
+        df = self._scan(spark, table)
         if keep is not None:
             df = df.filter(keep)
         partitioned = self.buckets is not None and BUCKET_COL in df.columns
@@ -341,6 +396,7 @@ class TableStore:
             target.with_name(target.name + ".__old__"),
             target.with_name(target.name + ".__tmp__"),
             target.with_name(target.name + ".__compact__"),
+            target.with_name(target.name + UPDATES_SUFFIX),
         ):
             if p.exists():
                 shutil.rmtree(p)
@@ -356,11 +412,3 @@ def _reconcile(df: DataFrame, schema: StructType | None) -> DataFrame:
         for f in schema.fields
     ]
     return df.select(cols)
-
-
-def dedupe_latest(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
-    """Keep the newest row per key (window row_number == 1)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(order_col).desc())
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")

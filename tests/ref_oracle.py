@@ -3,6 +3,11 @@ oracle, stubbing its heavyweight runtime deps (neo4j, pypdf,
 sentence_transformers) that are absent in this environment and irrelevant to
 the pure extraction functions under test.
 
+``load_reference_services`` does the same for the read-side services
+module. Both import on first call only: test modules call them from
+fixtures, so a missing reference errors exactly the parity tests that
+need it while the rest of each module still runs.
+
 Also provides ``RefSession`` — an in-memory stand-in for the Neo4j session
 that answers the two read queries the extractor issues (person lookup,
 display-name lookup) from the same persons/groups rows our EntityCatalog is
@@ -36,6 +41,39 @@ def load_reference_saia():
     import app.saia as saia  # noqa: PLC0415
 
     return saia
+
+
+def load_reference_services():
+    if "app.services" in sys.modules:
+        return sys.modules["app.services"]
+    # services.py imports langchain + the app.utils runtime; stub them
+    for name in ("langchain_core", "langchain_core.output_parsers", "langchain_core.prompts", "langchain_groq"):
+        mod = types.ModuleType(name)
+        sys.modules.setdefault(name, mod)
+
+    class _AnyStub:
+        def __init__(self, *a, **k):
+            pass
+
+        def __or__(self, other):
+            return self
+
+        @classmethod
+        def from_template(cls, *a, **k):
+            return cls()
+
+    sys.modules["langchain_core.output_parsers"].JsonOutputParser = _AnyStub
+    sys.modules["langchain_core.output_parsers"].StrOutputParser = _AnyStub
+    sys.modules["langchain_core.prompts"].ChatPromptTemplate = _AnyStub
+    sys.modules["langchain_groq"].ChatGroq = _AnyStub
+    load_reference_saia()  # installs the app package + fake app.utils
+    fake_utils = sys.modules["app.utils"]
+    fake_utils.GROQ_API_KEY = None
+    fake_utils.GROQ_MODEL = "none"
+    fake_utils.EMBEDDING_MODEL = "none"
+    import app.services as services  # noqa: PLC0415
+
+    return services
 
 
 class _Rows:

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sage_spark.kernel.retrieval import (
@@ -17,10 +18,17 @@ from sage_spark.operators.graph import (
     ist_display,
 )
 
-from .test_retrieval_parity import services
+from .ref_oracle import load_reference_services
 
 
-def test_displayable_entity_parity():
+@pytest.fixture(scope="module")
+def services():
+    """The reference services module, loaded only by the parity tests: they
+    error (not skip) when the reference is missing; the rest still run."""
+    return load_reference_services()
+
+
+def test_displayable_entity_parity(services):
     cases = [
         "Alice Johnson", "EMP001", "currentuser", "unknown", "sage", "chat-msg-42",
         "d1-chunk-3", "assignment::direct:a:b::send-report", "direct:a:b",
@@ -31,7 +39,7 @@ def test_displayable_entity_parity():
         assert is_displayable_trace_entity(case) == services._is_displayable_trace_entity(case), case
 
 
-def test_ist_formatting_parity():
+def test_ist_formatting_parity(services):
     samples = [
         "2026-04-01T10:00:00+00:00",
         "2026-04-01T10:00:00Z",

@@ -3,48 +3,13 @@ read-side functions (services.py) on identical inputs."""
 
 from __future__ import annotations
 
-import sys
-import types
 from datetime import datetime, timezone
 
 import pytest
 
+from .ref_oracle import load_reference_services
 
-def _load_reference_services():
-    if "app.services" in sys.modules:
-        return sys.modules["app.services"]
-    # services.py imports langchain + the app.utils runtime; stub them
-    for name in ("langchain_core", "langchain_core.output_parsers", "langchain_core.prompts", "langchain_groq"):
-        mod = types.ModuleType(name)
-        sys.modules.setdefault(name, mod)
-    class _AnyStub:
-        def __init__(self, *a, **k):
-            pass
-
-        def __or__(self, other):
-            return self
-
-        @classmethod
-        def from_template(cls, *a, **k):
-            return cls()
-
-    sys.modules["langchain_core.output_parsers"].JsonOutputParser = _AnyStub
-    sys.modules["langchain_core.output_parsers"].StrOutputParser = _AnyStub
-    sys.modules["langchain_core.prompts"].ChatPromptTemplate = _AnyStub
-    sys.modules["langchain_groq"].ChatGroq = _AnyStub
-    from .ref_oracle import load_reference_saia
-
-    load_reference_saia()  # installs the app package + fake app.utils
-    fake_utils = sys.modules["app.utils"]
-    fake_utils.GROQ_API_KEY = None
-    fake_utils.GROQ_MODEL = "none"
-    fake_utils.EMBEDDING_MODEL = "none"
-    import app.services as services  # noqa: PLC0415
-
-    return services
-
-
-services = _load_reference_services()
+services = load_reference_services()
 
 from sage_spark.kernel import retrieval as R  # noqa: E402
 
